@@ -230,8 +230,10 @@ def hyperplane_sketch(vec: str, n_planes: int = 16, dim: int = 64) -> Column:
     sign matrix under zip_with and null the whole accumulator (where the
     old per-plane form yielded bit 0), and ``n_planes`` must stay <= 31
     because shiftleft(1, p) is INT arithmetic (the old F.lit(1 << p)
-    promoted to long). Both are asserted here rather than silently
-    diverging; every registered embedding fixture is dim=64."""
+    promoted to long). Only the ``n_planes`` bound is asserted here; the
+    vector length is the caller's contract, unchecked because a runtime
+    check would change every plan that uses the sketch; every
+    registered embedding fixture is dim=64."""
     assert 0 < n_planes <= 31, f"n_planes={n_planes}: shiftleft(1, p) overflows INT past 31"
     mat_t = _sign_matrix_t_sql(n_planes, dim)
     projs = (
@@ -846,7 +848,8 @@ def query_vector(sf_dir: str, vec_id: int = 0) -> tuple:
         tbl = pq.read_table(
             f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
         ).to_pydict()
-    except (OSError, ImportError):
+    except (OSError, ImportError, ValueError):
+        # ValueError: pyarrow.ArrowInvalid, raised for a non-local URI
         row = (
             SparkSession.getActiveSession()
             .read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -880,7 +883,7 @@ def query_panel(sf_dir: str, n: int, with_label: bool = False):
         import pyarrow.parquet as pq
 
         tbl = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=cols).to_pydict()
-    except (OSError, ImportError):
+    except (OSError, ImportError, ValueError):
         collected = (
             SparkSession.getActiveSession()
             .read.parquet(f"{sf_dir}/embeddings.parquet")

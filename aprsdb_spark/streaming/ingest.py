@@ -18,6 +18,8 @@ state is an outage, not a feature.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,19 +27,29 @@ from pyspark.sql import functions as F
 from ..aprs.parse import parse_packets, parse_tnc2
 
 
+def _read_state(spark: SparkSession, path: str) -> DataFrame:
+    """Load a sink's parquet state, first completing a swap that crashed
+    mid-overwrite (_recover_incomplete_swap) — a sink self-heals only on
+    its next micro-batch, so a view refreshed in between would otherwise
+    serve truncated state (ADVICE r15). Raises AnalysisException when
+    the path does not exist."""
+    _recover_incomplete_swap(spark, path)
+    # drop is a no-op for absent columns: states written with the
+    # embedded replay marker (_run_key/_batch_id, see
+    # _last_applied_batch) and legacy marker-less states both come
+    # back in the sink's logical schema
+    return spark.read.parquet(path).drop("_run_key", "_batch_id")
+
+
 def _read_state_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Load a sink's parquet state, returning None ONLY when the path
-    does not exist yet (first batch). Any other failure — transient IO,
-    a partially-written/corrupt store — propagates so the micro-batch
+    """_read_state, returning None ONLY when the path does not exist yet
+    (first batch). Any other failure — transient IO, a
+    partially-written/corrupt store — propagates so the micro-batch
     fails and Structured Streaming retries it; swallowing those here
     would silently reset additive state to just the current batch's
     partial (ADVICE r6)."""
     try:
-        # drop is a no-op for absent columns: states written with the
-        # embedded replay marker (_run_key/_batch_id, see
-        # _last_applied_batch) and legacy marker-less states both come
-        # back in the sink's logical schema
-        return spark.read.parquet(path).drop("_run_key", "_batch_id")
+        return _read_state(spark, path)
     except AnalysisException as e:
         cond = getattr(e, "getCondition", lambda: None)() or ""
         if "PATH_NOT_FOUND" in cond or "Path does not exist" in str(e):
@@ -271,9 +283,9 @@ def _recover_incomplete_swap(spark: SparkSession, state_dir: str) -> None:
     would skip the batch and freeze truncated state. Recovery is
     deterministic because `_next` still holds the complete intended
     state: if the main dir lacks `_SUCCESS` while `_next` has one,
-    redo the copy before anything reads the state. Runs at the top of
-    every overwrite sink; a completed main dir makes it a no-op stat
-    call."""
+    redo the copy before anything reads the state. Runs ahead of the
+    replay guard in _merge_store and ahead of every state read in
+    _read_state; a completed main dir makes it a no-op stat call."""
     import os
 
     nxt = state_dir + "_next"
@@ -306,33 +318,100 @@ def _with_marker(df: DataFrame, run_key: str | None, batch_id: int) -> DataFrame
     )
 
 
+def _apply_once(
+    state_dir: str, run_key: str | None, batch_id: int, apply: Callable[[], None]
+) -> None:
+    """Run ``apply()`` unless ``(run_key, batch_id)`` is already applied
+    to ``state_dir``, then record it in the sidecar — the replay guard
+    of every sink here (see _merge_store). The append-only sinks
+    (dedup_ingest, ann_ingest) use it directly: their store rows span
+    many batches, so only the sidecar marks them."""
+    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
+        return
+    apply()
+    if run_key is not None:
+        _record_applied_batch(state_dir, run_key, batch_id)
+
+
+def _merge_store(
+    spark: SparkSession,
+    state_dir: str,
+    run_key: str | None,
+    batch_id: int,
+    merge: Callable[[DataFrame | None], DataFrame | None],
+) -> None:
+    """The exactly-once state protocol of every overwrite sink here:
+    ``state_dir`` := ``merge(existing state, or None on the first
+    batch)``, applied at most once per ``(run_key, batch_id)``. A
+    ``merge`` that returns None skips the write but still records the
+    batch as applied.
+
+    foreachBatch is at-least-once — after a crash the restarted query
+    re-delivers the last micro-batch with the SAME batch_id, and a blind
+    re-apply double-counts every additive store. Pass ``run_key`` (the
+    query's checkpoint path — batch_ids are only unique per checkpoint):
+    a batch_id <= the last one applied for the same run_key is skipped,
+    a different run_key is a deliberate reprocessing run and always
+    applies, and run_key=None turns the guard off. The steps, in an
+    order each one depends on:
+
+    1. _recover_incomplete_swap, BEFORE the guard: it restores the main
+       dir's `_SUCCESS`, and only then is the embedded marker trusted —
+       guarding first would re-apply a batch `_next` already holds.
+    2. The guard (_apply_once): skip if already applied. Sinks build
+       their batch partial lazily and launch Spark jobs only inside
+       ``merge``, so a skipped re-delivery does no work (the one
+       exception is lateness_monitor_sink's watermark read, which the
+       panel partial is classified against).
+    3. Read the state (missing path only -> None), merge, and write it
+       with the marker embedded in the rows (_with_marker) to
+       `<dir>_next` — committer-atomic: `_SUCCESS` appears on commit.
+    4. Swap: overwrite the main dir from `_next`. The swap read
+       re-validates `_next`, so a corrupt `_next` fails here with the
+       old state intact; a crash during the overwrite is step 1's case.
+    5. Record the sidecar (`<dir>_meta/last_batch.json`). A crash
+       between 4 and 5 (the r7 ADVICE window) does not re-apply: the
+       marker already committed with the data (_last_applied_batch).
+
+    A sink with several stores calls this once per store, each with its
+    own marker, so a crash between store swaps re-applies only the
+    stores that missed the batch."""
+    _recover_incomplete_swap(spark, state_dir)
+
+    def swap() -> None:
+        merged = merge(_read_state_or_none(spark, state_dir))
+        if merged is None:
+            return
+        nxt = state_dir + "_next"
+        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(nxt)
+        spark.read.parquet(nxt).write.mode("overwrite").parquet(state_dir)
+
+    _apply_once(state_dir, run_key, batch_id, swap)
+
+
+def _sum_merge(part: DataFrame, *keys: str) -> Callable[[DataFrame | None], DataFrame]:
+    """The additive merge law for _merge_store: the batch ``part`` on the
+    first batch, else (state ∪ part) grouped by ``keys`` with every
+    other column of ``part`` summed as BIGINT."""
+    cols = [c for c in part.columns if c not in keys]
+    return lambda existing: (
+        part
+        if existing is None
+        else existing.unionByName(part)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
+    )
+
+
 def upsert_stations_sink(
     batch: DataFrame, batch_id: int, stations_dir: str, run_key: str | None = None
 ) -> None:
     """foreachBatch upsert of the stations dimension — the collector's
-    'DB write'. Parquet read-merge-overwrite here; on a real deployment
-    this is a Delta/Iceberg MERGE keyed on src (same shape,
-    transactional).
-
-    Idempotence under replay: foreachBatch is at-least-once — after a
-    crash the restarted query re-delivers the last micro-batch with the
-    SAME batch_id. Because this merge SUMS n_packets, a blind re-apply
-    double-counts, so pass ``run_key`` (the query's checkpoint path —
-    batch_ids are only unique per checkpoint) and the sink records the
-    last applied (run_key, batch_id) in a sidecar
-    (`<dir>_meta/last_batch.json`, written after the swap) and skips any
-    batch_id <= it for the same run_key — the standard
-    "transactional-ish" foreachBatch recipe. A different run_key is a
-    deliberate reprocessing run and always applies. With run_key=None
-    the guard is off (at-least-once, replay inflates n_packets).
-    The marker is ALSO embedded in the state rows (_with_marker), so it
-    commits atomically with the data — a crash between the swap and the
-    sidecar write (the r7 ADVICE window) no longer re-applies; see
-    _last_applied_batch."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, stations_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(stations_dir, run_key):
-        return
+    'DB write': per src, the latest last_heard and position, and summed
+    n_packets. Parquet read-merge-overwrite here (_merge_store); on a
+    real deployment this is a Delta/Iceberg MERGE keyed on src (same
+    shape, transactional). Without ``run_key`` a re-delivered batch
+    inflates n_packets."""
     agg = (
         batch.where(F.col("src").isNotNull())
         .groupBy("src")
@@ -343,9 +422,11 @@ def upsert_stations_sink(
             F.max_by("longitude", "recv_ts").alias("last_lon"),
         )
     )
-    existing = _read_state_or_none(spark, stations_dir)
-    if existing is not None:
-        merged = (
+
+    def merge(existing):
+        if existing is None:
+            return agg
+        return (
             existing.unionByName(agg)
             .groupBy("src")
             .agg(
@@ -355,15 +436,8 @@ def upsert_stations_sink(
                 F.max_by("last_lon", "last_heard").alias("last_lon"),
             )
         )
-    else:
-        merged = agg
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        stations_dir + "_next"
-    )
-    # atomic-ish swap via overwrite of the main dir
-    spark.read.parquet(stations_dir + "_next").write.mode("overwrite").parquet(stations_dir)
-    if run_key is not None:
-        _record_applied_batch(stations_dir, run_key, batch_id)
+
+    _merge_store(batch.sparkSession, stations_dir, run_key, batch_id, merge)
 
 
 def run_available_now(stream_df: DataFrame, checkpoint: str, sink=None, **foreach_kwargs):
@@ -390,38 +464,23 @@ def incremental_rollup_sink(
     state ⊕ delta == full recompute at every point in time (the batch
     qid's driver-checked fact; tests/test_streaming.py asserts the
     streamed state equals the one-shot batch aggregate after replay).
-
-    Same read-merge-overwrite + (run_key, batch_id) replay guard as
-    upsert_stations_sink — sums double-count under at-least-once
-    re-delivery, so the sidecar marker skips re-applied batches. Input
-    schema: any frame with (day, value) columns."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
+    The value sum stays DECIMAL, so the merge is exact in any batch
+    split. Input schema: any frame with (day, value) columns."""
     part = batch.groupBy("day").agg(
         F.count("*").cast("long").alias("n"),
         F.sum(F.col("value").cast("decimal(20,6)")).alias("s"),
     )
-    existing = _read_state_or_none(spark, state_dir)
-    if existing is not None:
-        merged = (
+
+    def merge(existing):
+        if existing is None:
+            return part
+        return (
             existing.unionByName(part)
             .groupBy("day")
             .agg(F.sum("n").cast("long").alias("n"), F.sum("s").alias("s"))
         )
-    else:
-        merged = part
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    # the swap read re-validates _next: a corrupt/partial _next fails
-    # here and propagates (a retry before the swap sees the old state
-    # intact; a retry AFTER a completed swap is caught by the marker
-    # embedded in the state rows — _last_applied_batch)
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+
+    _merge_store(batch.sparkSession, state_dir, run_key, batch_id, merge)
 
 
 def cdc_apply_sink(
@@ -443,58 +502,48 @@ def cdc_apply_sink(
 
     Merge shape: the batch collapses to one row per key (max_by on the
     order struct + a count partial) BEFORE touching the store, so the
-    read-merge-overwrite handles |keys| rows, not |changes|. Same
-    missing-path-only state read and (run_key, batch_id) replay guard
-    as the other sinks here."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
+    merge handles |keys| rows, not |changes|."""
     ordk = F.struct("ts_ms", "event_id")
     part = batch.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_changes"),
         F.max_by(F.struct("ts_ms", "event_id", "value", "op"), ordk).alias("last"),
     )
-    existing = _read_state_or_none(spark, state_dir)
-    if existing is not None:
-        prev = existing.select(
-            "user_id",
-            "n_changes",
-            F.struct("ts_ms", "event_id", "value", "op").alias("last"),
-        )
-        merged = (
-            prev.unionByName(part)
-            .groupBy("user_id")
-            .agg(
-                F.sum("n_changes").cast("long").alias("n_changes"),
-                F.max_by(
-                    F.col("last"), F.struct("last.ts_ms", "last.event_id")
-                ).alias("last"),
-            )
-        )
-    else:
+
+    def merge(existing):
         merged = part
-    flat = merged.select(
-        "user_id",
-        F.col("last.ts_ms").alias("ts_ms"),
-        F.col("last.event_id").alias("event_id"),
-        F.col("last.value").alias("value"),
-        F.col("last.op").alias("op"),
-        "n_changes",
-    )
-    _with_marker(flat, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+        if existing is not None:
+            prev = existing.select(
+                "user_id",
+                "n_changes",
+                F.struct("ts_ms", "event_id", "value", "op").alias("last"),
+            )
+            merged = (
+                prev.unionByName(part)
+                .groupBy("user_id")
+                .agg(
+                    F.sum("n_changes").cast("long").alias("n_changes"),
+                    F.max_by(
+                        F.col("last"), F.struct("last.ts_ms", "last.event_id")
+                    ).alias("last"),
+                )
+            )
+        return merged.select(
+            "user_id",
+            F.col("last.ts_ms").alias("ts_ms"),
+            F.col("last.event_id").alias("event_id"),
+            F.col("last.value").alias("value"),
+            F.col("last.op").alias("op"),
+            "n_changes",
+        )
+
+    _merge_store(batch.sparkSession, state_dir, run_key, batch_id, merge)
 
 
 def cdc_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     """The queryable snapshot over cdc_apply_sink's store: surviving
     keys only (tombstones filtered), in the batch operator's column
     contract."""
-    s = spark.read.parquet(state_dir)
+    s = _read_state(spark, state_dir)
     return s.where(F.col("op") != "D").select(
         "user_id",
         F.col("op").alias("last_op"),
@@ -520,25 +569,23 @@ def dedup_ingest_sink(
     by |novel| rows per batch and nothing rewrites, which is what
     makes this viable when the store is 10^10 documents (at that size
     the store is a bucketed table on h and the anti join is
-    exchange-free on the store side). Same (run_key, batch_id) replay
-    guard as the other sinks — append without it double-ingests under
-    at-least-once re-delivery."""
-    if run_key is not None and batch_id <= _last_applied_batch(store_dir, run_key):
-        return
-    spark = batch.sparkSession
+    exchange-free on the store side). Without ``run_key`` (_apply_once)
+    a re-delivered batch double-ingests."""
     cand = (
         batch.select(F.md5("text").alias("h"), "doc_id", "text")
         .groupBy("h")
         .agg(F.min_by(F.struct("doc_id", "text"), F.col("doc_id")).alias("first"))
         .select("h", F.col("first.doc_id").alias("doc_id"), F.col("first.text").alias("text"))
     )
-    existing = _read_state_or_none(spark, store_dir)
-    novel = (
-        cand.join(existing.select("h"), "h", "left_anti") if existing is not None else cand
-    )
-    novel.write.mode("append").parquet(store_dir)
-    if run_key is not None:
-        _record_applied_batch(store_dir, run_key, batch_id)
+
+    def append() -> None:
+        existing = _read_state_or_none(batch.sparkSession, store_dir)
+        novel = (
+            cand.join(existing.select("h"), "h", "left_anti") if existing is not None else cand
+        )
+        novel.write.mode("append").parquet(store_dir)
+
+    _apply_once(store_dir, run_key, batch_id, append)
 
 
 def ann_ingest_sink(
@@ -577,13 +624,11 @@ def ann_ingest_sink(
     step between "index maintained" and "index served".
     tests/test_streaming.py pins both the plan (no store-side
     Exchange) and replay ≡ batch-assignment equivalence in table
-    mode; ``index_dir`` then carries only the replay-guard sidecar.
-    Same (run_key, batch_id) sidecar replay guard — append without
-    it double-ingests under at-least-once delivery."""
+    mode; ``index_dir`` then carries only the replay-guard sidecar
+    (_apply_once — without ``run_key`` a re-delivered batch
+    double-ingests)."""
     from ..operators.similarity import as_double, best_code_expr
 
-    if run_key is not None and batch_id <= _last_applied_batch(index_dir, run_key):
-        return
     spark = batch.sparkSession
     d = len(books[0][0][1])
     # In-batch duplicate vec_ids break on md5 of the JSON rendering of
@@ -611,30 +656,32 @@ def ann_ingest_sink(
             for b in range(len(books))
         ],
     )
-    if store_table is not None:
-        existing = (
-            spark.table(store_table)
-            if spark.catalog.tableExists(store_table)
-            else None
+
+    def append() -> None:
+        if store_table is not None:
+            existing = (
+                spark.table(store_table)
+                if spark.catalog.tableExists(store_table)
+                else None
+            )
+        else:
+            existing = _read_state_or_none(spark, index_dir)
+        novel = (
+            codes.join(existing.select("vec_id"), "vec_id", "left_anti")
+            if existing is not None
+            else codes
         )
-    else:
-        existing = _read_state_or_none(spark, index_dir)
-    novel = (
-        codes.join(existing.select("vec_id"), "vec_id", "left_anti")
-        if existing is not None
-        else codes
-    )
-    if store_table is not None:
-        (
-            novel.write.mode("append")
-            .bucketBy(8, "vec_id")
-            .sortBy("vec_id")
-            .saveAsTable(store_table)
-        )
-    else:
-        novel.write.mode("append").parquet(index_dir)
-    if run_key is not None:
-        _record_applied_batch(index_dir, run_key, batch_id)
+        if store_table is not None:
+            (
+                novel.write.mode("append")
+                .bucketBy(8, "vec_id")
+                .sortBy("vec_id")
+                .saveAsTable(store_table)
+            )
+        else:
+            novel.write.mode("append").parquet(index_dir)
+
+    _apply_once(index_dir, run_key, batch_id, append)
 
 
 def leakage_monitor_sink(
@@ -656,16 +703,11 @@ def leakage_monitor_sink(
 
     Scale shape: the batch collapses to (h, split) partials BEFORE
     touching state (shuffle carries 16-byte digests + counts, never
-    text); the store merge is the incremental_rollup read-merge-swap
-    with the same crash-recovery + (run_key, batch_id) replay guard
-    (counts double under at-least-once re-delivery without it);
-    alerts are APPEND-only and deduped per (h, split) by the anti
-    join against already-alerted pairs, so re-deliveries cannot
-    re-alert. Input schema: (doc_id, text)."""
+    text); the store merges by addition; alerts are APPEND-only, written
+    to `<state_dir>_alerts` before the store swap and deduped per
+    (h, split) by the anti join against already-alerted pairs, so
+    re-deliveries cannot re-alert. Input schema: (doc_id, text)."""
     spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
     prefix = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     split = (
         F.when(prefix < "cd", "train").when(prefix < "e6", "val").otherwise("test")
@@ -675,46 +717,37 @@ def leakage_monitor_sink(
         .groupBy("h", "split")
         .agg(F.count("*").cast("long").alias("n"))
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("h", "split")
-        .agg(F.sum("n").cast("long").alias("n"))
-        if existing is not None
-        else part
-    )
-    # alerts: arriving (h, split) pairs whose hash exists under a
-    # DIFFERENT split in the prior store OR elsewhere in this same
-    # batch (a cross-split pair can arrive together — both sides
-    # alert, deterministically), minus pairs already alerted
     alerts_dir = state_dir + "_alerts"
-    known = (
-        existing.select("h", "split").unionByName(part.select("h", "split"))
-        if existing is not None
-        else part.select("h", "split")
-    ).distinct()
-    crossed = (
-        part.alias("p")
-        .join(
-            known.alias("e"),
-            (F.col("p.h") == F.col("e.h"))
-            & (F.col("p.split") != F.col("e.split")),
+
+    def alert_then_merge(existing):
+        # alerts: arriving (h, split) pairs whose hash exists under a
+        # DIFFERENT split in the prior store OR elsewhere in this same
+        # batch (a cross-split pair can arrive together — both sides
+        # alert, deterministically), minus pairs already alerted
+        known = (
+            existing.select("h", "split").unionByName(part.select("h", "split"))
+            if existing is not None
+            else part.select("h", "split")
+        ).distinct()
+        crossed = (
+            part.alias("p")
+            .join(
+                known.alias("e"),
+                (F.col("p.h") == F.col("e.h"))
+                & (F.col("p.split") != F.col("e.split")),
+            )
+            .groupBy(F.col("p.h").alias("h"), F.col("p.split").alias("split"))
+            .agg(F.sort_array(F.collect_set("e.split")).alias("prior_splits"))
         )
-        .groupBy(F.col("p.h").alias("h"), F.col("p.split").alias("split"))
-        .agg(F.sort_array(F.collect_set("e.split")).alias("prior_splits"))
-    )
-    prior_alerts = _read_state_or_none(spark, alerts_dir)
-    if prior_alerts is not None:
-        crossed = crossed.join(
-            prior_alerts.select("h", "split"), ["h", "split"], "left_anti"
-        )
-    crossed.write.mode("append").parquet(alerts_dir)
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+        prior_alerts = _read_state_or_none(spark, alerts_dir)
+        if prior_alerts is not None:
+            crossed = crossed.join(
+                prior_alerts.select("h", "split"), ["h", "split"], "left_anti"
+            )
+        crossed.write.mode("append").parquet(alerts_dir)
+        return _sum_merge(part, "h", "split")(existing)
+
+    _merge_store(spark, state_dir, run_key, batch_id, alert_then_merge)
 
 
 def drift_monitor_sink(
@@ -744,14 +777,8 @@ def drift_monitor_sink(
 
     Scale shape: the batch collapses to ≤ |days|·10 (day, bucket)
     partials BEFORE touching state (shuffle carries two small ints);
-    the merge is the incremental_rollup read-merge-swap with the same
-    crash recovery + (run_key, batch_id) replay guard (counts double
-    under at-least-once re-delivery without it). Input schema:
-    (ts_ms long, value double)."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
+    the store merges by addition. Input schema: (ts_ms long, value
+    double)."""
     v6 = F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long")
     part = (
         batch.select(
@@ -770,20 +797,13 @@ def drift_monitor_sink(
         .groupBy("day_idx", "bucket")
         .agg(F.count("*").cast("long").alias("oc"))
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("day_idx", "bucket")
-        .agg(F.sum("oc").cast("long").alias("oc"))
-        if existing is not None
-        else part
+    _merge_store(
+        batch.sparkSession,
+        state_dir,
+        run_key,
+        batch_id,
+        _sum_merge(part, "day_idx", "bucket"),
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
 
 
 def drift_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -793,7 +813,7 @@ def drift_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     identity over equal count matrices, not a reimplementation."""
     from ..queries.timeseries import drift_from_counts
 
-    state = spark.read.parquet(state_dir).select("day_idx", "bucket", "oc")
+    state = _read_state(spark, state_dir).select("day_idx", "bucket", "oc")
     return drift_from_counts(state)
 
 
@@ -805,23 +825,16 @@ def quality_gate_sink(
     batch collapses to per-source (count, defect-count) partials under
     the SHARED structural defect predicate (wilson_defect_col — one
     definition for the batch gate and the monitor), merged into state
-    by the read-merge-swap with the (run_key, batch_id) replay guard.
-    quality_gate_view() serves the accumulated state through the SAME
+    by addition. quality_gate_view() serves the accumulated state through the SAME
     wilson_from_counts rollup as the batch audit, so streamed ≡ batch
     after ordered replay is shared code, not a reimplementation — an
     ingestion operator can threshold live on ci_low (the
     small-slice-safe bound) instead of waiting for the nightly audit.
 
     Scale shape: the batch collapses to |sources| rows of two BIGINTs
-    BEFORE touching state; counts double under at-least-once
-    re-delivery without the guard. Input schema: (source, n_chars,
-    text)."""
+    BEFORE touching state. Input schema: (source, n_chars, text)."""
     from ..queries.governance import wilson_defect_col
 
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
     part = (
         batch.select("source", wilson_defect_col().alias("defect"))
         .groupBy("source")
@@ -830,23 +843,9 @@ def quality_gate_sink(
             F.sum("defect").cast("long").alias("x"),
         )
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("source")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("x").cast("long").alias("x"),
-        )
-        if existing is not None
-        else part
+    _merge_store(
+        batch.sparkSession, state_dir, run_key, batch_id, _sum_merge(part, "source")
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
 
 
 def quality_gate_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -856,7 +855,7 @@ def quality_gate_view(spark: SparkSession, state_dir: str) -> DataFrame:
     from ..queries.governance import wilson_from_counts
 
     return wilson_from_counts(
-        spark.read.parquet(state_dir).select("source", "n", "x")
+        _read_state(spark, state_dir).select("source", "n", "x")
     )
 
 
@@ -869,9 +868,8 @@ def card_monitor_sink(
     counts (languages, distinct texts, vocabulary) cannot merge as
     scalars, so the sink maintains the three ADDITIVE part stores from
     data_card_parts — (source, lang), (source, text-digest,
-    char/token mass), (source, token) — each merged by plain summation
-    under one shared (run_key, batch_id) replay guard, and
-    card_current_view() derives the card through the SAME
+    char/token mass), (source, token) — each merged by plain summation,
+    and card_current_view() derives the card through the SAME
     data_card_from_parts rollup as the batch qid. Distinct-counts
     become row counts of summed stores: the release dashboard updates
     per micro-batch without ever re-scanning the corpus.
@@ -880,42 +878,20 @@ def card_monitor_sink(
     store is one 16-byte row per DISTINCT text (the dedup_ingest store
     scale argument — viable at 10^10 docs bucketed by digest); the
     token store is Heaps-law-small. Each batch collapses to its
-    partials map-side before touching any store. Each of the three
-    stores carries its OWN replay guard (embedded marker + sidecar,
-    per-store dir): a replayed batch re-applies ONLY the stores that
-    missed it, so a crash between store swaps recovers without
-    double-counting the early stores or freezing the late ones. Input
-    schema: (source, n_chars, text)."""
+    partials map-side before touching any store. Each store carries
+    its OWN replay marker — one shared guard would either double-count
+    the early stores or freeze the late ones after a crash between
+    store swaps. Input schema: (source, n_chars, text)."""
     from ..queries.governance import data_card_parts
 
-    spark = batch.sparkSession
-    parts = data_card_parts(batch)
-    dirs = [state_dir + "_lang", state_dir + "_digest", state_dir + "_token"]
-    keys = [["source", "lang"], ["source", "digest"], ["source", "token"]]
-    sums = [["n"], ["n", "sum_chars", "sum_toks"], ["n"]]
-    # each store carries its OWN full replay guard (embedded marker +
-    # sidecar): a crash between store swaps followed by at-least-once
-    # re-delivery must re-apply ONLY the stores that missed the batch —
-    # one shared guard would either double-count the early stores or
-    # freeze the late ones, depending on where it sat in the sequence
-    for part, d, key, cols in zip(parts, dirs, keys, sums):
-        _recover_incomplete_swap(spark, d)
-        if run_key is not None and batch_id <= _last_applied_batch(d, run_key):
-            continue
-        existing = _read_state_or_none(spark, d)
-        merged = (
-            existing.unionByName(part)
-            .groupBy(*key)
-            .agg(*[F.sum(cn).cast("long").alias(cn) for cn in cols])
-            if existing is not None
-            else part
+    for part, name in zip(data_card_parts(batch), ("lang", "digest", "token")):
+        _merge_store(
+            batch.sparkSession,
+            f"{state_dir}_{name}",
+            run_key,
+            batch_id,
+            _sum_merge(part, "source", name),
         )
-        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-            d + "_next"
-        )
-        spark.read.parquet(d + "_next").write.mode("overwrite").parquet(d)
-        if run_key is not None:
-            _record_applied_batch(d, run_key, batch_id)
 
 
 def card_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -923,11 +899,11 @@ def card_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     shared rollup (queries/governance.data_card_from_parts)."""
     from ..queries.governance import data_card_from_parts
 
-    a = spark.read.parquet(state_dir + "_lang").select("source", "lang", "n")
-    b = spark.read.parquet(state_dir + "_digest").select(
+    a = _read_state(spark, state_dir + "_lang").select("source", "lang", "n")
+    b = _read_state(spark, state_dir + "_digest").select(
         "source", "digest", "n", "sum_chars", "sum_toks"
     )
-    c = spark.read.parquet(state_dir + "_token").select("source", "token", "n")
+    c = _read_state(spark, state_dir + "_token").select("source", "token", "n")
     return data_card_from_parts(a, b, c)
 
 
@@ -944,11 +920,8 @@ def cms_monitor_sink(
     cms_relation rollup as the batch qid, so the live heavy-hitter
     panel and the nightly audit are one definition.
 
-    Each of the two stores carries its OWN replay guard (embedded
-    marker + sidecar, per-store dir, the card_monitor_sink recovery
-    design): a crash between store swaps followed by at-least-once
-    re-delivery re-applies ONLY the store that missed the batch —
-    counts double otherwise.
+    Each of the two stores carries its OWN replay marker (the
+    card_monitor_sink design).
 
     Scale shape: the cells store is a CONSTANT 4x256 rows at any
     corpus scale (the point of CMS); the truth store is vocab-sized
@@ -966,28 +939,10 @@ def cms_monitor_sink(
     # the exception path would leak one cached token frame per retry
     # into executor storage until the stream dies.
     try:
-        parts = [cms_cells(tok), cms_truth(tok)]
-        dirs = [state_dir + "_cells", state_dir + "_truth"]
-        keys = [["d", "bucket"], ["tok"]]
-        sums = [["c"], ["true_count"]]
-        for part, d, key, cols in zip(parts, dirs, keys, sums):
-            _recover_incomplete_swap(spark, d)
-            if run_key is not None and batch_id <= _last_applied_batch(d, run_key):
-                continue
-            existing = _read_state_or_none(spark, d)
-            merged = (
-                existing.unionByName(part)
-                .groupBy(*key)
-                .agg(*[F.sum(cn).cast("long").alias(cn) for cn in cols])
-                if existing is not None
-                else part
-            )
-            _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-                d + "_next"
-            )
-            spark.read.parquet(d + "_next").write.mode("overwrite").parquet(d)
-            if run_key is not None:
-                _record_applied_batch(d, run_key, batch_id)
+        cells = _sum_merge(cms_cells(tok), "d", "bucket")
+        _merge_store(spark, state_dir + "_cells", run_key, batch_id, cells)
+        truth = _sum_merge(cms_truth(tok), "tok")
+        _merge_store(spark, state_dir + "_truth", run_key, batch_id, truth)
     finally:
         tok.unpersist()
 
@@ -998,8 +953,8 @@ def cms_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     shared rollup (queries/sketches.cms_relation)."""
     from ..queries.sketches import cms_relation
 
-    cms = spark.read.parquet(state_dir + "_cells").select("d", "bucket", "c")
-    truth = spark.read.parquet(state_dir + "_truth").select("tok", "true_count")
+    cms = _read_state(spark, state_dir + "_cells").select("d", "bucket", "c")
+    truth = _read_state(spark, state_dir + "_truth").select("tok", "true_count")
     return cms_relation(cms, truth)
 
 
@@ -1016,57 +971,34 @@ def hll_monitor_sink(
 
     The register MAX-merge is IDEMPOTENT, so a replayed batch could
     never corrupt the registers — the per-store replay guard here
-    skips redundant work and keeps the store-swap discipline uniform
-    with the additive monitors (an operator debugging recovery should
-    find ONE design, not one per merge law). The distinct-user truth
-    store (merged by DISTINCT union — also idempotent) exists so the
-    view can audit the estimate against the exact count; a
-    pure-production deployment keeps only the 256-row register store.
-    Input schema: (user_id)."""
+    skips redundant work and keeps one store-swap design across merge
+    laws. The distinct-user truth store (merged by DISTINCT union —
+    also idempotent) exists so the view can audit the estimate against
+    the exact count; a pure-production deployment keeps only the
+    256-row register store. Input schema: (user_id)."""
     from ..queries.sketches import hll_registers
 
     spark = batch.sparkSession
-    regs_dir, users_dir = state_dir + "_regs", state_dir + "_users"
-
-    _recover_incomplete_swap(spark, regs_dir)
-    if not (
-        run_key is not None and batch_id <= _last_applied_batch(regs_dir, run_key)
-    ):
-        part = hll_registers(batch)
-        existing = _read_state_or_none(spark, regs_dir)
-        merged = (
-            existing.unionByName(part)
-            .groupBy("reg")
-            .agg(F.max("r").alias("r"))
-            if existing is not None
-            else part
-        )
-        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-            regs_dir + "_next"
-        )
-        spark.read.parquet(regs_dir + "_next").write.mode("overwrite").parquet(
-            regs_dir
-        )
-        if run_key is not None:
-            _record_applied_batch(regs_dir, run_key, batch_id)
-
-    _recover_incomplete_swap(spark, users_dir)
-    if not (
-        run_key is not None and batch_id <= _last_applied_batch(users_dir, run_key)
-    ):
-        part = batch.select("user_id").distinct()
-        existing = _read_state_or_none(spark, users_dir)
-        merged = (
-            existing.unionByName(part).distinct() if existing is not None else part
-        )
-        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-            users_dir + "_next"
-        )
-        spark.read.parquet(users_dir + "_next").write.mode("overwrite").parquet(
-            users_dir
-        )
-        if run_key is not None:
-            _record_applied_batch(users_dir, run_key, batch_id)
+    regs = hll_registers(batch)
+    users = batch.select("user_id").distinct()
+    _merge_store(
+        spark,
+        state_dir + "_regs",
+        run_key,
+        batch_id,
+        lambda existing: regs
+        if existing is None
+        else existing.unionByName(regs).groupBy("reg").agg(F.max("r").alias("r")),
+    )
+    _merge_store(
+        spark,
+        state_dir + "_users",
+        run_key,
+        batch_id,
+        lambda existing: users
+        if existing is None
+        else existing.unionByName(users).distinct(),
+    )
 
 
 def hll_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1075,9 +1007,9 @@ def hll_current_view(spark: SparkSession, state_dir: str) -> DataFrame:
     shared rollup (queries/sketches.hll_relation)."""
     from ..queries.sketches import hll_relation
 
-    regs = spark.read.parquet(state_dir + "_regs").select("reg", "r")
+    regs = _read_state(spark, state_dir + "_regs").select("reg", "r")
     truth = (
-        spark.read.parquet(state_dir + "_users")
+        _read_state(spark, state_dir + "_users")
         .agg(F.countDistinct("user_id").cast("long").alias("n_true"))
     )
     return hll_relation(regs, truth)
@@ -1114,36 +1046,20 @@ def ivf_occupancy_sink(
     trains; in production frozen from the index build, the
     drift_monitor frozen-grid convention) via the zero-shuffle
     ivf_assign map stage, collapses to per-cell count partials, and
-    merges BY ADDITION under the (run_key, batch_id) replay guard.
-    ivf_balance_view() serves the state through the SAME
+    merges BY ADDITION. ivf_balance_view() serves the state through the SAME
     ivf_balance_from_occ rollup, so an index operator watches cell
     skew grow micro-batch by micro-batch — a hot cell shows up here
     batches before the nightly audit or a straggling probe query
     does. Input schema: (vec_id, label, embedding)."""
     from ..operators.similarity import ivf_assign
 
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
     assigned, _ = ivf_assign(batch, k_clusters=len(cents), cents=cents)
     part = assigned.groupBy("cluster_id").agg(
         F.count("*").cast("long").alias("n_vecs")
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("cluster_id")
-        .agg(F.sum("n_vecs").cast("long").alias("n_vecs"))
-        if existing is not None
-        else part
+    _merge_store(
+        batch.sparkSession, state_dir, run_key, batch_id, _sum_merge(part, "cluster_id")
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
 
 
 def ivf_balance_view(spark: SparkSession, state_dir: str, k: int) -> DataFrame:
@@ -1154,11 +1070,6 @@ def ivf_balance_view(spark: SparkSession, state_dir: str, k: int) -> DataFrame:
     rollup (queries/llm.ivf_balance_from_occ)."""
     from ..queries.llm import ivf_balance_from_occ
 
-    # A monitor refresh between a crash mid-swap and the sink's next
-    # micro-batch would otherwise serve truncated state (the sink only
-    # self-heals on its next invocation) — recover on the READ side too
-    # (ADVICE r15); a completed main dir makes this a no-op stat call.
-    _recover_incomplete_swap(spark, state_dir)
     # The state frame is metadata-sized BY CONSTRUCTION (<= k rows, one
     # per occupied cell — the sink pre-aggregates per batch), so collect
     # it ONCE and serve both the truncation guard and the returned plan
@@ -1168,7 +1079,7 @@ def ivf_balance_view(spark: SparkSession, state_dir: str, k: int) -> DataFrame:
     # per refresh, and the two scans could straddle a sink swap
     # (ADVICE r14). A snapshot is also the right monitor semantics: the
     # guard and the served rows describe the same state version.
-    stored = spark.read.parquet(state_dir).select("cluster_id", "n_vecs").collect()
+    stored = _read_state(spark, state_dir).select("cluster_id", "n_vecs").collect()
     # A k smaller than the quantizer the sink actually used would DROP
     # occupied cells in the spine join below and silently renormalize
     # share/load_factor over the truncated spine — fail instead.
@@ -1215,76 +1126,44 @@ def lateness_monitor_sink(
     at-least-once re-delivery re-applies only the watermark (a pure
     monotone MAX — idempotent and classification-free); the reverse
     order would re-classify the batch against a watermark its own rows
-    advanced, double-dropping borderline rows. Each store carries the
-    standard replay guard (embedded marker + sidecar, per-store dir).
+    advanced, double-dropping borderline rows. Each store carries its
+    own replay marker.
 
     Scale shape: the panel is |windows| rows (calendar-sized), the
     watermark store is 1 row, and the per-batch work is one narrow
     classification map + one window_start hash agg with map-side
     partials. Input schema: (ts_ms BIGINT)."""
     spark = batch.sparkSession
-    wm_dir, panel_dir = state_dir + "_wm", state_dir + "_panel"
-    _recover_incomplete_swap(spark, wm_dir)
-    _recover_incomplete_swap(spark, panel_dir)
-    stored = _read_state_or_none(spark, wm_dir)
-    wm = None
-    if stored is not None:
-        row = stored.agg(F.max("wm_ms").alias("w")).head()
-        wm = row["w"]
-    # panel FIRST (see docstring)
-    if run_key is None or batch_id > _last_applied_batch(panel_dir, run_key):
-        late = (
-            F.col("ts_ms") < F.lit(wm) if wm is not None else F.lit(False)
+    stored = _read_state_or_none(spark, state_dir + "_wm")
+    wm = stored.agg(F.max("wm_ms")).head()[0] if stored is not None else None
+    late = F.col("ts_ms") < F.lit(wm) if wm is not None else F.lit(False)
+    part = (
+        batch.select(
+            (F.floor(F.col("ts_ms") / window_ms).cast("long") * window_ms).alias(
+                "window_start_ms"
+            ),
+            late.cast("long").alias("is_late"),
         )
-        part = (
-            batch.select(
-                (F.floor(F.col("ts_ms") / window_ms).cast("long") * window_ms).alias(
-                    "window_start_ms"
-                ),
-                late.cast("long").alias("is_late"),
-            )
-            .groupBy("window_start_ms")
-            .agg(
-                F.sum(1 - F.col("is_late")).cast("long").alias("admitted"),
-                F.sum("is_late").cast("long").alias("dropped_late"),
-            )
+        .groupBy("window_start_ms")
+        .agg(
+            F.sum(1 - F.col("is_late")).cast("long").alias("admitted"),
+            F.sum("is_late").cast("long").alias("dropped_late"),
         )
-        existing = _read_state_or_none(spark, panel_dir)
-        merged = (
-            existing.unionByName(part)
-            .groupBy("window_start_ms")
-            .agg(
-                F.sum("admitted").cast("long").alias("admitted"),
-                F.sum("dropped_late").cast("long").alias("dropped_late"),
-            )
-            if existing is not None
-            else part
-        )
-        _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-            panel_dir + "_next"
-        )
-        spark.read.parquet(panel_dir + "_next").write.mode("overwrite").parquet(
-            panel_dir
-        )
-        if run_key is not None:
-            _record_applied_batch(panel_dir, run_key, batch_id)
-    # watermark SECOND: monotone max(stored, batch max - delay)
-    if run_key is None or batch_id > _last_applied_batch(wm_dir, run_key):
-        mx = batch.agg(F.max("ts_ms").alias("m")).head()["m"]
+    )
+
+    def advance(_existing):
+        # monotone max(stored, batch max - delay); None: nothing to store
+        mx = batch.agg(F.max("ts_ms")).head()[0]
         cand = [v for v in (wm, (mx - delay_ms) if mx is not None else None)
                 if v is not None]
-        new_wm = max(cand) if cand else None
-        if new_wm is not None:
-            _with_marker(
-                spark.createDataFrame([(int(new_wm),)], "wm_ms long"),
-                run_key,
-                batch_id,
-            ).write.mode("overwrite").parquet(wm_dir + "_next")
-            spark.read.parquet(wm_dir + "_next").write.mode("overwrite").parquet(
-                wm_dir
-            )
-        if run_key is not None:
-            _record_applied_batch(wm_dir, run_key, batch_id)
+        if not cand:
+            return None
+        return spark.createDataFrame([(int(max(cand)),)], "wm_ms long")
+
+    # panel FIRST, watermark SECOND (see docstring)
+    panel = _sum_merge(part, "window_start_ms")
+    _merge_store(spark, state_dir + "_panel", run_key, batch_id, panel)
+    _merge_store(spark, state_dir + "_wm", run_key, batch_id, advance)
 
 
 def lateness_view(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1292,15 +1171,10 @@ def lateness_view(spark: SparkSession, state_dir: str) -> DataFrame:
     dropped_late, late_share) ordered facts plus the current watermark
     as a column — one glance says which windows are losing data and
     whether the delay budget is sized right."""
-    # Read-side crash recovery, same rationale as ivf_balance_view: a
-    # refresh between a mid-swap crash and the next micro-batch must
-    # not serve a truncated panel or a stale watermark (ADVICE r15).
-    _recover_incomplete_swap(spark, state_dir + "_panel")
-    _recover_incomplete_swap(spark, state_dir + "_wm")
-    panel = spark.read.parquet(state_dir + "_panel").select(
+    panel = _read_state(spark, state_dir + "_panel").select(
         "window_start_ms", "admitted", "dropped_late"
     )
-    wm = spark.read.parquet(state_dir + "_wm").agg(
+    wm = _read_state(spark, state_dir + "_wm").agg(
         F.max("wm_ms").alias("watermark_ms")
     )
     return panel.crossJoin(F.broadcast(wm)).select(
@@ -1393,15 +1267,9 @@ def volume_monitor_sink(
 
     Scale shape: the batch collapses to ≤ |types|·|days| partials
     BEFORE touching state (the shuffle carries a string and a small
-    int); the merge is the incremental_rollup read-merge-swap with the
-    same crash recovery + (run_key, batch_id) replay guard. One state
-    serves BOTH charts (and any future consumer of the daily-volume
+    int). One state serves BOTH charts (and any future consumer of the daily-volume
     matrix) — the monitor cost is paid once per micro-batch, not per
     chart. Input schema: (ts_ms long, event_type string)."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
     part = (
         batch.select(
             "event_type", F.expr("ts_ms div 86400000").alias("day_idx")
@@ -1409,30 +1277,19 @@ def volume_monitor_sink(
         .groupBy("event_type", "day_idx")
         .agg(F.count("*").cast("long").alias("c"))
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("event_type", "day_idx")
-        .agg(F.sum("c").cast("long").alias("c"))
-        if existing is not None
-        else part
+    _merge_store(
+        batch.sparkSession,
+        state_dir,
+        run_key,
+        batch_id,
+        _sum_merge(part, "event_type", "day_idx"),
     )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
 
 
 def _volume_daily(spark: SparkSession, state_dir: str) -> DataFrame:
     """The accumulated state as the (event_type, day DATE, v) relation
-    the shared chart rollups expect. Read-side crash recovery first
-    (the lateness_view / ivf_balance_view ADVICE-r15 rule): a refresh
-    between a mid-swap crash and the next micro-batch must not serve a
-    truncated count matrix."""
-    _recover_incomplete_swap(spark, state_dir)
-    return spark.read.parquet(state_dir).select(
+    the shared chart rollups expect."""
+    return _read_state(spark, state_dir).select(
         "event_type",
         F.date_from_unix_date(F.col("day_idx").cast("int")).alias("day"),
         F.col("c").cast("long").alias("v"),
@@ -1470,8 +1327,8 @@ def lifetime_monitor_sink(
     batch collapses to per-user (first_idx, last_idx) day-span
     partials and merges into state BY MIN/MAX — the third merge law
     on the shelf (addition for counts, MAX for HLL registers, MIN/MAX
-    spans here), idempotent under replay by construction; the guard
-    still skips redundant work and keeps recovery uniform. The two
+    spans here), idempotent under replay by construction; the replay
+    guard still skips redundant work. The two
     views below serve the state through the exact rollups the batch
     qids call (km_from_lifetimes / logrank_from_lifetimes), so
     streamed ≡ batch is an identity over equal lifetime tables.
@@ -1479,15 +1336,10 @@ def lifetime_monitor_sink(
     Scale shape: the batch collapses to ≤ |batch users| partials
     BEFORE touching state (the shuffle carries three small ints); the
     state is user-cardinality — the standard sessionization state
-    class, partitioned parquet under read-merge-swap with the same
-    crash recovery. Censoring is decided at VIEW time from the
+    class, partitioned parquet under read-merge-swap. Censoring is decided at VIEW time from the
     state's own max day (a user whose last event touches the newest
     observed day is censored), so the monitor needs no clock. Input
     schema: (ts_ms long, user_id long)."""
-    spark = batch.sparkSession
-    _recover_incomplete_swap(spark, state_dir)
-    if run_key is not None and batch_id <= _last_applied_batch(state_dir, run_key):
-        return
     part = (
         batch.select("user_id", F.expr("ts_ms div 86400000").alias("day_idx"))
         .groupBy("user_id")
@@ -1496,31 +1348,26 @@ def lifetime_monitor_sink(
             F.max("day_idx").cast("long").alias("last_idx"),
         )
     )
-    existing = _read_state_or_none(spark, state_dir)
-    merged = (
-        existing.unionByName(part)
-        .groupBy("user_id")
-        .agg(
-            F.min("first_idx").cast("long").alias("first_idx"),
-            F.max("last_idx").cast("long").alias("last_idx"),
+
+    def merge(existing):
+        if existing is None:
+            return part
+        return (
+            existing.unionByName(part)
+            .groupBy("user_id")
+            .agg(
+                F.min("first_idx").cast("long").alias("first_idx"),
+                F.max("last_idx").cast("long").alias("last_idx"),
+            )
         )
-        if existing is not None
-        else part
-    )
-    _with_marker(merged, run_key, batch_id).write.mode("overwrite").parquet(
-        state_dir + "_next"
-    )
-    spark.read.parquet(state_dir + "_next").write.mode("overwrite").parquet(state_dir)
-    if run_key is not None:
-        _record_applied_batch(state_dir, run_key, batch_id)
+
+    _merge_store(batch.sparkSession, state_dir, run_key, batch_id, merge)
 
 
 def _lifetimes(spark: SparkSession, state_dir: str) -> DataFrame:
     """The accumulated state as the per-user (user_id, dur, ld)
-    relation the shared survival rollups expect, with read-side
-    mid-swap recovery (the ADVICE-r15 rule)."""
-    _recover_incomplete_swap(spark, state_dir)
-    return spark.read.parquet(state_dir).select(
+    relation the shared survival rollups expect."""
+    return _read_state(spark, state_dir).select(
         "user_id",
         (F.col("last_idx") - F.col("first_idx")).cast("long").alias("dur"),
         F.date_from_unix_date(F.col("last_idx").cast("int")).alias("ld"),

@@ -4,6 +4,7 @@ lowering vs a naive quadratic reference; top-k ⊆ sort prefix."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -436,11 +437,18 @@ def test_portable_hash_matches_python_reference(spark):
         assert got[s] == (h64, h32, b), (s, got[s], (h64, h32, b))
 
 
-def test_query_vector_and_panel_fall_back_to_spark_on_unreadable_path(spark, monkeypatch):
+@pytest.mark.parametrize(
+    "exc", [OSError, pa.ArrowInvalid], ids=["OSError", "ArrowInvalid"]
+)
+def test_query_vector_and_panel_fall_back_to_spark_on_unreadable_path(
+    spark, monkeypatch, exc
+):
     """ADVICE r16: the driver-side pyarrow reads in query_vector /
     query_panel must degrade to the pre-r16 bounded Spark job on a
     non-local sf_dir (pyarrow only reads local paths) — and the fallback
-    must return value-identical tuples."""
+    must return value-identical tuples. Both errors pyarrow raises for
+    an unreadable path are covered: OSError, and ArrowInvalid (a
+    ValueError) for a non-local URI."""
     from tests.conftest import SF_DIR
 
     from aprsdb_spark.operators import similarity as sim
@@ -455,7 +463,7 @@ def test_query_vector_and_panel_fall_back_to_spark_on_unreadable_path(spark, mon
     import pyarrow.parquet as pq
 
     def _boom(*a, **k):
-        raise OSError("simulated remote sf_dir URI")
+        raise exc("simulated remote sf_dir URI")
 
     monkeypatch.setattr(pq, "read_table", _boom)
     assert sim.query_vector(SF_DIR) == via_arrow_vec
